@@ -26,8 +26,6 @@ from __future__ import annotations
 
 from pyspark.sql import types as T
 
-MICROS_PER_SECOND = 1_000_000
-
 # Operational constants of the reference service (BASELINE.md).
 DEFAULT_QUERY_LIMIT = 100_000          # application.conf:23-24
 DEFAULT_GAP_MULTIPLE = 2.0             # application.conf:30-31
@@ -104,11 +102,6 @@ INGEST_SEGMENTS_SCHEMA = T.StructType(
         T.StructField("data", T.ArrayType(T.DoubleType()), True),
     ]
 )
-
-
-def sample_period_us(rate_hz: float) -> float:
-    """Microseconds between samples (reference QuerySequencer.scala:82)."""
-    return MICROS_PER_SECOND / rate_hz
 
 
 def sample_count(duration_us: int, rate_hz: float) -> int:

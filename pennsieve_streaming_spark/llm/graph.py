@@ -34,12 +34,13 @@ cluster-level dedup.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pennsieve_streaming_spark.util import pin
+
+# connected_components runs union-find on the driver up to this many edges
+CC_DRIVER_EDGE_CAP = 2_000_000
 
 
 def _cc_driver(edges: DataFrame) -> DataFrame:
@@ -146,8 +147,7 @@ def connected_components(
     # cap the edge list is bounded model state and the exact labels
     # are computed in one collect instead of ~2 jobs per star round;
     # bigger graphs keep the distributed loop unchanged.
-    cap = int(os.environ.get("SPARK_GRAFT_CC_DRIVER_EDGE_CAP", "2000000"))
-    if edges.limit(cap + 1).count() <= cap:
+    if edges.limit(CC_DRIVER_EDGE_CAP + 1).count() <= CC_DRIVER_EDGE_CAP:
         return _cc_driver(edges)
     state = _edge_state(edges)
     for _ in range(max_iter):

@@ -5,8 +5,6 @@ run as a single narrow map over a 100 TB documents table.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -14,6 +12,11 @@ from pennsieve_streaming_spark.llm.hashing import poly_hash_expr
 from pennsieve_streaming_spark.util import pin, pin_big
 
 TOKS = "split(trim(text), '\\\\s+')"
+
+# BPE training runs on the driver up to this many distinct words, and
+# encoding broadcasts the merge state up to this many rows
+BPE_DRIVER_VOCAB_CAP = 2_000_000
+BPE_BROADCAST_CAP = 5_000_000
 
 # Per-language marker words for the n-gram/stopword language heuristic.
 LANG_MARKERS: dict[str, list[str]] = {
@@ -695,11 +698,8 @@ def bpe_merges(
     # left-to-right application — so merges and final state are
     # bit-identical (oracle-gated). Corpora whose post-min_count vocab
     # exceeds the cap keep the distributed loop unchanged.
-    cap = int(
-        os.environ.get("SPARK_GRAFT_BPE_DRIVER_VOCAB_CAP", "2000000")
-    )
-    wc = words.limit(cap + 1).count()
-    if wc <= cap:
+    wc = words.limit(BPE_DRIVER_VOCAB_CAP + 1).count()
+    if wc <= BPE_DRIVER_VOCAB_CAP:
         return _bpe_merges_driver(
             spark, words, int(n_merges), return_state
         )
@@ -858,10 +858,9 @@ def bpe_encode(
     # size-gate the forced broadcast (same bounded-model-state rule as
     # the training gate): a cheap bounded count of the pinned/local
     # state table — beyond the cap, leave the strategy to the planner.
-    bcap = int(
-        os.environ.get("SPARK_GRAFT_BPE_BROADCAST_CAP", "5000000")
+    small_vocab = (
+        state.limit(BPE_BROADCAST_CAP + 1).count() <= BPE_BROADCAST_CAP
     )
-    small_vocab = state.limit(bcap + 1).count() <= bcap
     if small_vocab:
         seg_arr = F.broadcast(seg_arr)
         inventory = F.broadcast(inventory)

@@ -22,6 +22,9 @@ US = 1_000_000
 DAY_US = 86_400 * US
 WEEK_US = 7 * DAY_US
 
+# funnel_steps broadcasts a stage frame only up to this many users
+FUNNEL_BROADCAST_CAP = 5_000_000
+
 
 def daily_active(events: DataFrame) -> DataFrame:
     """(day epoch-µs, n_events, active_users) — DAU with exact distinct
@@ -281,8 +284,6 @@ def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     would not scale to long funnels), with a broadcast step-name dim
     filling unreached tail steps with 0.
     """
-    import os
-
     from pennsieve_streaming_spark.util import pin
 
     # Each stage's per-user frame is PINNED (optimization r11): stage
@@ -304,11 +305,9 @@ def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     # pin_big variant that restores real stats was A/B'd and measured
     # +54% wall at sf0.1 — AQE TableCacheQueryStage round-trips — so
     # the gated checkpoint keeps both the speed and the safety.)
-    cap = int(os.environ.get("SPARK_GRAFT_FUNNEL_BROADCAST_CAP", "5000000"))
-
     def _stage_join_side(frame):
-        n = frame.limit(cap + 1).count()
-        return F.broadcast(frame) if n <= cap else frame
+        n = frame.limit(FUNNEL_BROADCAST_CAP + 1).count()
+        return F.broadcast(frame) if n <= FUNNEL_BROADCAST_CAP else frame
 
     cur = pin(
         events.filter(F.col("event_type") == steps[0])

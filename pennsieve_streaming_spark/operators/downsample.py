@@ -228,25 +228,6 @@ def fill_gaps(minmax: DataFrame, order_col: str = "bucket") -> DataFrame:
     return minmax.withColumn("filled_min", new_min).withColumn("filled_max", new_max)
 
 
-def interleave_minmax(minmax: DataFrame, order_col: str = "bucket") -> DataFrame:
-    """Collect per-channel interleaved [min,max,min,max,...] payload
-    arrays, the reference Segment ``data`` wire shape
-    (BaseTimeSeriesQuery.scala:86-88)."""
-    return (
-        minmax.groupBy("channel")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(order_col, "min_val", "max_val"))
-                    ),
-                    lambda s: F.array(s["min_val"], s["max_val"]),
-                )
-            ).alias("data")
-        )
-    )
-
-
 def downsample_ltob(samples: DataFrame, bucket_samples: int) -> DataFrame:
     """Largest-Triangle-One-Bucket downsample (Steinarsson 2013, the
     one-bucket variant of LTTB): rank samples per channel, cut into

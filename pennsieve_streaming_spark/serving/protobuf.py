@@ -377,11 +377,13 @@ def segment_row_to_message(
 
 def data_message_to_protobuf(msg: dict) -> TimeSeriesMessage:
     """Convert a transport data message (``{"channel", "rows",
-    "totalResponses", "responseSequenceId", ...}``) into the reference's
-    binary wire message. Raw rows ``(ts, value)`` become a plain
-    segment; min/max rows ``(bucket, min_val, max_val, ...)`` become an
-    interleaved [min,max,...] payload with ``isMinMax`` set
-    (BaseTimeSeriesQuery.scala:86-96)."""
+    "isMinMax", "totalResponses", "responseSequenceId", ...}``) into the
+    reference's binary wire message. The page kind comes from the
+    message's ``isMinMax``, so an empty page keeps its kind: min/max
+    rows ``(bucket, min_val, max_val, ...)`` become an interleaved
+    [min,max,...] payload with ``isMinMax`` set
+    (BaseTimeSeriesQuery.scala:86-96), raw rows ``(ts, value)`` a plain
+    segment."""
     rows = msg["rows"]
     name = msg.get("channel", "")
     if rows and "avg_time" in rows[0] and "count" in rows[0]:
@@ -409,20 +411,17 @@ def data_message_to_protobuf(msg: dict) -> TimeSeriesMessage:
             total_responses=int(msg.get("totalResponses", 1)),
             response_sequence_id=int(msg.get("responseSequenceId", 0)),
         )
-    if rows and "min_val" in rows[0]:
+    is_min_max = bool(msg.get("isMinMax", False))
+    if is_min_max:
         ordered = sorted(rows, key=lambda r: r["bucket"])
         data = [v for r in ordered for v in (r["min_val"], r["max_val"])]
         start_ts = int(
             ordered[0].get("bucket_start", ordered[0]["bucket"]) if ordered else 0
         )
-        is_min_max = True
-        nr_points = len(ordered)
     else:
-        ordered = sorted(rows, key=lambda r: r["ts"]) if rows else []
+        ordered = sorted(rows, key=lambda r: r["ts"])
         data = [r["value"] for r in ordered]
         start_ts = int(ordered[0]["ts"]) if ordered else 0
-        is_min_max = False
-        nr_points = len(ordered)
     seg = Segment(
         start_ts=start_ts,
         source=name,
@@ -430,7 +429,7 @@ def data_message_to_protobuf(msg: dict) -> TimeSeriesMessage:
         is_min_max=is_min_max,
         unit_m=1000,
         segment_type="Continuous",
-        nr_points=nr_points,
+        nr_points=len(ordered),
         data=data,
         channel_name=name,
     )

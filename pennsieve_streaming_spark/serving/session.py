@@ -33,14 +33,10 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pennsieve_streaming_spark.datamodel import DEFAULT_QUERY_LIMIT
 from pennsieve_streaming_spark.operators.rollups import downsample_from_rollup
-from pennsieve_streaming_spark.plans.router import plan_pixel_query
+from pennsieve_streaming_spark.plans.router import QueryPlan, plan_pixel_query
 from pennsieve_streaming_spark.dsp.filtering import FilterSpec, apply_filter
-from pennsieve_streaming_spark.operators.downsample import (
-    downsample_minmax_time,
-    should_resample,
-)
+from pennsieve_streaming_spark.operators.downsample import downsample_minmax_time
 from pennsieve_streaming_spark.operators.montage import (
     CUSTOM_MONTAGE,
     WIRE_MONTAGE_NAMES,
@@ -51,7 +47,10 @@ from pennsieve_streaming_spark.operators.montage import (
     resolve_pairs,
     validate_montage,
 )
-from pennsieve_streaming_spark.operators.window import window_query
+from pennsieve_streaming_spark.operators.window import (
+    QueryLimitExceeded,
+    window_query,
+)
 
 
 # --------------------------------------------------------------------------
@@ -180,6 +179,16 @@ class _SessionState:
     epoch: int = 0
 
 
+class Pages(dict):
+    """``QuerySession.run``'s answer: virtual channel -> page DataFrame,
+    with each channel's QueryPlan in ``plans`` so delivery knows the
+    page kind (raw or min/max) without looking at the rows."""
+
+    def __init__(self, plans: dict[str, QueryPlan]):
+        super().__init__()
+        self.plans = plans
+
+
 class QuerySession:
     """One client session over the engine (reference: the per-session
     Akka flow graph + state maps).
@@ -224,42 +233,6 @@ class QuerySession:
     def close(self) -> None:
         """T7/T8 kill switch: cancel everything for the session."""
         self.spark.sparkContext.cancelJobGroup(self.job_group)
-
-    # -- P5: transport-level admission guard ------------------------------
-    def check_admission(
-        self, req: TimeSeriesRequest, limit: int = DEFAULT_QUERY_LIMIT
-    ) -> None:
-        """Refuse raw requests whose effective row count exceeds the
-        configured query limit BEFORE any Spark job runs (reference
-        ``overLimit``, query/TimeSeriesQueryUtils.scala:362-369).
-
-        Closes the r2 hole where a client-supplied ``queryLimit`` made
-        ``run()`` skip the planner guard entirely (``raw_limit=None``):
-        the effective collect size is min(estimated samples, explicit
-        limit), and THAT must fit the admission limit — a request with
-        ``queryLimit=10**9`` must not OOM the driver. Resampled paths
-        are bounded by pixel count and pass freely.
-        """
-        from pennsieve_streaming_spark.operators.downsample import should_resample
-        from pennsieve_streaming_spark.operators.window import QueryLimitExceeded
-
-        for name in req.virtual_channels:
-            lead, _ = parse_montage_name(name)
-            rate = self.rates.get(lead, 1.0)
-            if req.pixel_width and should_resample(rate, req.pixel_width):
-                continue  # output rows == pixel count, driver-safe
-            estimated = (req.end_time - req.start_time) / 1e6 * rate
-            effective = (
-                min(estimated, req.query_limit)
-                if req.query_limit is not None
-                else estimated
-            )
-            if effective > limit:
-                exc = QueryLimitExceeded(
-                    f"exceeded retrieval limit of {limit}"
-                )
-                exc.channel_names = [name]
-                raise exc
 
     # -- T10: filter lifecycle -------------------------------------------
     def set_filter(self, req: FilterRequest) -> None:
@@ -307,19 +280,21 @@ class QuerySession:
         ]
 
     # -- T1/T2: data request execution -----------------------------------
-    def _channel_frame(self, name: str) -> tuple[DataFrame, float]:
+    def _channel_frame(self, name: str) -> DataFrame:
         lead, secondary = parse_montage_name(name)
         if secondary is not None:
-            df = montage_two_channels(self.samples, lead, secondary)
-        else:
-            df = self.samples.filter(self.samples["channel"] == lead)
-        return df, self.rates.get(lead, 1.0)
+            return montage_two_channels(self.samples, lead, secondary)
+        return self.samples.filter(self.samples["channel"] == lead)
 
-    def run(self, req: TimeSeriesRequest) -> dict[str, DataFrame]:
-        """Execute a data request: per virtual channel, window + guard,
-        then raw slice or min/max downsample (the A2 decision), with any
-        session filter applied first. Queries run under the session's
-        job group so dump_buffer() can cancel them mid-flight."""
+    def run(self, req: TimeSeriesRequest) -> Pages:
+        """Execute a data request. Every virtual channel is planned
+        first (plans/router.py: raw, direct or rollup, plus the row
+        limit), so an over-limit channel raises QueryLimitExceeded
+        before any DataFrame is built or job runs. Each page is then
+        built from its plan: raw slice, or min/max downsample from the
+        samples or a rollup, with any session filter applied to the
+        samples first. Queries run under the session's job group so
+        dump_buffer() can cancel them mid-flight."""
         if self.state.montage is not None:
             # montaged names must belong to the active scheme's virtual
             # channel set (MontageType.names, server/Montage.scala:220-222)
@@ -337,37 +312,30 @@ class QuerySession:
             start += self.package_min_ts
             end += self.package_min_ts
 
+        plans: dict[str, QueryPlan] = {}
+        for name in req.virtual_channels:
+            lead, secondary = parse_montage_name(name)
+            try:
+                plans[name] = plan_pixel_query(
+                    start,
+                    end,
+                    req.pixel_width,
+                    self.rates.get(lead, 1.0),
+                    rollup_levels_us=sorted(self.rollups),
+                    query_limit=req.query_limit,
+                    transformed=secondary is not None or name in self.state.filters,
+                )
+            except QueryLimitExceeded as exc:
+                exc.channel_names = [name]
+                raise
+
         self.spark.sparkContext.setJobGroup(
             self.job_group, f"session {self.session_id}", interruptOnCancel=True
         )
-        out: dict[str, DataFrame] = {}
-        for name in req.virtual_channels:
-            df, rate = self._channel_frame(name)
-            limit = req.query_limit
-            plan = plan_pixel_query(
-                start,
-                end,
-                req.pixel_width,
-                rate,
-                rollup_levels_us=sorted(self.rollups) or None,
-                raw_limit=DEFAULT_QUERY_LIMIT if limit is None else None,
-            )
-            spec = self.state.filters.get(name)
-            lead, secondary = parse_montage_name(name)
-            # downsample_from_rollup's contract requires the window to
-            # sit on the rollup grid: an unaligned start would drop the
-            # straddling first bucket and shift pixel boundaries vs the
-            # direct raw-scan path. Unaligned windows fall back to the
-            # direct path (correct for any window).
-            use_rollup = (
-                plan.path == "rollup"
-                and plan.rollup_level_us in self.rollups
-                and spec is None
-                and secondary is None
-                and start % plan.rollup_level_us == 0
-                and end % plan.rollup_level_us == 0
-            )
-            if use_rollup:
+        out = Pages(plans)
+        for name, plan in plans.items():
+            lead, _ = parse_montage_name(name)
+            if plan.path == "rollup":
                 rollup = self.rollups[plan.rollup_level_us].filter(
                     F.col("channel") == lead
                 )
@@ -375,15 +343,15 @@ class QuerySession:
                     rollup, plan.rollup_level_us, start, end, req.pixel_width
                 )
                 continue
-            windowed = window_query(df, None, start, end, limit=limit)
+            page = window_query(
+                self._channel_frame(name), None, start, end, limit=req.query_limit
+            )
+            spec = self.state.filters.get(name)
             if spec is not None:
-                windowed = apply_filter(windowed, spec, rate)
-            if req.pixel_width and should_resample(rate, req.pixel_width):
-                out[name] = downsample_minmax_time(
-                    windowed, start, end, req.pixel_width
-                )
-            else:
-                out[name] = windowed
+                page = apply_filter(page, spec, self.rates.get(lead, 1.0))
+            if plan.path == "direct":
+                page = downsample_minmax_time(page, start, end, req.pixel_width)
+            out[name] = page
         return out
 
     # -- unit (event/spike) path -----------------------------------------

@@ -27,6 +27,13 @@ Reference semantics reproduced:
   ``session.parse_request``; unparseable input produces a JSON error
   message (the reference's error TextMessage lane) without killing the
   connection.
+- **P5 admission** (overLimit, query/TimeSeriesQueryUtils.scala:362-369):
+  the transport makes no serving decision of its own. ``QuerySession.run``
+  plans every channel through ``plans/router.py`` before any Spark job,
+  so an over-limit request answers on the error lane untouched by the
+  cluster. Admitted pages are bounded, and each channel is delivered
+  with one ``collect()`` as one data message carrying its page kind
+  (``isMinMax``, the reference Segment field).
 """
 
 from __future__ import annotations
@@ -172,12 +179,10 @@ class Connection:
 
     async def _execute(self, req: TimeSeriesRequest, epoch: int) -> None:
         try:
-            # admission guard BEFORE the Spark job: driver-side metadata
-            # check only (reference overLimit) — an over-limit request
-            # answers on the error lane without touching the cluster,
-            # and _run_collect never collects an unbounded raw result.
-            self.session.check_admission(req)
-            results = await asyncio.to_thread(self._run_collect, req)
+            # QuerySession.run plans every channel before any Spark job:
+            # an over-limit request raises QueryLimitExceeded and
+            # answers on the error lane without touching the cluster
+            pages = await asyncio.to_thread(self._run_collect, req)
         except Exception as e:
             if epoch < self.session.state.epoch:
                 return  # cancellation noise from a dumped epoch
@@ -185,27 +190,32 @@ class Connection:
             return
         if epoch < self.session.state.epoch:
             return  # T5: dumped while the Spark job ran -> suppress
-        total = len(results)
-        for i, (name, rows) in enumerate(results.items()):
+        total = len(pages)
+        for i, (name, (is_min_max, rows)) in enumerate(pages.items()):
             await self.send(
                 {
                     "channel": name,
                     "epoch": epoch,
                     "responseSequenceId": i,
                     "totalResponses": total,
+                    "isMinMax": is_min_max,
                     "rows": rows,
                 }
             )
 
-    def _run_collect(self, req: TimeSeriesRequest) -> dict[str, list[dict]]:
-        # total rows are bounded by check_admission (raw paths) or by
-        # pixel counts (resampled paths); toLocalIterator additionally
-        # caps the JVM-side driver footprint at one partition at a time
-        # instead of materializing every channel's full result at once.
-        out = self.session.run(req)
+    def _run_collect(
+        self, req: TimeSeriesRequest
+    ) -> dict[str, tuple[bool, list[dict]]]:
+        # one collect() per channel: raw pages are bounded by the
+        # router's admission limit and resampled pages by their pixel
+        # count, so no page can outgrow the driver
+        pages = self.session.run(req)
         return {
-            name: [row.asDict() for row in df.toLocalIterator()]
-            for name, df in out.items()
+            name: (
+                pages.plans[name].path != "raw",
+                [row.asDict() for row in df.collect()],
+            )
+            for name, df in pages.items()
         }
 
     # -- timers ----------------------------------------------------------

@@ -87,22 +87,3 @@ def streaming_gap_sessions(samples_stream: DataFrame, gap_us: int) -> DataFrame:
         )
         .select("channel", "span_lo", "span_hi", "n_samples")
     )
-
-
-def write_samples_stream(
-    samples: DataFrame, out_path: str, checkpoint: str, partitions: int = 8
-) -> "StreamingQuery":  # noqa: F821
-    """Append the exploded sample stream to the partitioned samples
-    table. channel-hash bucketing keeps each channel's data co-located
-    so batch queries prune by directory."""
-    bucketed = samples.withColumn(
-        "channel_bucket", F.abs(F.hash("channel")) % partitions
-    )
-    return (
-        bucketed.writeStream.format("parquet")
-        .option("path", out_path)
-        .option("checkpointLocation", checkpoint)
-        .partitionBy("channel_bucket")
-        .outputMode("append")
-        .start()
-    )

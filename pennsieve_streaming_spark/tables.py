@@ -25,19 +25,6 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-TABLE_NAMES = [
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-]
-
 # Notional sample rate (Hz) assigned to derived channels; only used by
 # operators that need a rate parameter (gap thresholds, resample math).
 DERIVED_RATE_HZ = 10.0
@@ -95,18 +82,6 @@ def ensure_package_shipped(spark: SparkSession) -> None:
                     z.write(full, rel)
     sc.addPyFile(zpath)
     sc._pss_pkg_shipped = True
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Load every base parquet table and register temp views."""
-    out = {}
-    for name in TABLE_NAMES:
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(path):
-            df = spark.read.parquet(path)
-            df.createOrReplaceTempView(name)
-            out[name] = df
-    return out
 
 
 # ---------------------------------------------------------------------------

@@ -61,41 +61,6 @@ def pin_big(df: DataFrame, eager: bool = True) -> DataFrame:
     return out
 
 
-def live_plan_tree(plan: str) -> str:
-    """The tree portion of a plan string with every cached-lineage
-    subtree removed — i.e. only the operators that EXECUTE when the
-    query runs. A persisted (pin_big) table prints its cached lineage
-    (including the original parquet scan) under the cache node —
-    ``toString`` nests an InMemoryRelation beneath the
-    InMemoryTableScan; ``formatted`` mode nests the cached plan
-    DIRECTLY under the InMemoryTableScan line with no
-    InMemoryRelation tree line — but that lineage ran once at the
-    cache-fill barrier, not per consumer; counting it as live would
-    make every cache look like a replay. The InMemoryTableScan line
-    itself is kept (it IS the live read); everything nested deeper is
-    dropped. Formatted-mode detail sections (lines starting ``(n) ``)
-    are dropped too, so every operator is counted exactly once."""
-    import re
-
-    out: list[str] = []
-    skip_indent: int | None = None
-    for ln in plan.splitlines():
-        if re.match(r"^\(\d+\) ", ln):
-            break  # formatted detail section — the tree has ended
-        indent = len(ln) - len(ln.lstrip(" :+|-*"))
-        if skip_indent is not None:
-            if indent > skip_indent:
-                continue
-            skip_indent = None
-        if "InMemoryRelation" in ln:
-            skip_indent = indent
-            continue
-        out.append(ln)
-        if "InMemoryTableScan" in ln:
-            skip_indent = indent
-    return "\n".join(out)
-
-
 def live_plan_nodes(df: DataFrame, executed: bool = False) -> list[str]:
     """Node names of the operators that EXECUTE when ``df`` runs —
     the JVM plan tree walked directly, never descending into a cached

@@ -469,6 +469,7 @@ def test_cc_driver_path_matches_distributed_loop(spark, monkeypatch):
     alternating-star distributed loop label the same graph
     identically: component = min reachable id, chains, cycles,
     reversed dups and self-loops included."""
+    from pennsieve_streaming_spark.llm import graph
     from pennsieve_streaming_spark.llm.graph import connected_components
 
     pairs = spark.createDataFrame(
@@ -482,7 +483,7 @@ def test_cc_driver_path_matches_distributed_loop(spark, monkeypatch):
     fast = sorted(
         tuple(r) for r in connected_components(pairs).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_CC_DRIVER_EDGE_CAP", "0")
+    monkeypatch.setattr(graph, "CC_DRIVER_EDGE_CAP", 0)
     slow = sorted(
         tuple(r) for r in connected_components(pairs).collect()
     )

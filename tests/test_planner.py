@@ -46,6 +46,39 @@ def test_rollup_skipped_when_buckets_subsample():
     assert p.path in ("direct", "raw")
 
 
+def test_explicit_query_limit_min_rule():
+    # the driver collects min(estimate, queryLimit) rows: a huge
+    # explicit limit cannot lift the 100k guard, a small one admits
+    with pytest.raises(QueryLimitExceeded):
+        plan_pixel_query(0, 3600 * US, 8000, 250.0, query_limit=10**9)
+    p = plan_pixel_query(0, 3600 * US, 8000, 250.0, query_limit=5)
+    assert p.path == "raw"
+    assert p.estimated_input_rows == 900_000
+    assert p.estimated_output_rows == 5
+    # a limit above the estimate leaves the estimate in charge
+    p = plan_pixel_query(0, 10 * US, 8000, 250.0, query_limit=10**9)
+    assert p.estimated_output_rows == 2500
+
+
+def test_filtered_or_montaged_channel_resamples_directly():
+    # the same wide view that routes to the hourly rollup, but the
+    # channel's samples exist only after a filter or montage
+    p = plan_pixel_query(0, 30 * 24 * HOUR, HOUR, 1000.0, transformed=True)
+    assert p.path == "direct"
+    assert p.rollup_level_us is None
+    # an empty ladder means no rollups, not the default ladder
+    p = plan_pixel_query(0, 30 * 24 * HOUR, HOUR, 1000.0, rollup_levels_us=[])
+    assert p.path == "direct"
+
+
+def test_off_grid_window_resamples_directly():
+    # downsample_from_rollup needs both window bounds on the level grid
+    for start, end in ((1, 30 * 24 * HOUR), (0, 30 * 24 * HOUR + 1)):
+        p = plan_pixel_query(start, end, HOUR, 1000.0)
+        assert p.path == "direct", (start, end)
+    assert plan_pixel_query(HOUR, 3 * HOUR, HOUR, 1000.0).path == "rollup"
+
+
 # --------------------------------------------------------------------------
 # physical-plan shape assertions for the similarity/dedup hot paths
 # --------------------------------------------------------------------------

@@ -104,3 +104,64 @@ def test_no_duplicate_module_constants():
         f"duplicate module-level constants (silent oracle-text "
         f"rewrites): {offenders}"
     )
+
+
+# Deployment settings: the only environment reads the package may make.
+_ENV_READS_ALLOWED = {
+    ("session.py", "SPARK_GRAFT_CPUS"),
+    ("session.py", "SPARK_DRIVER_MEM"),
+    ("serving/launcher.py", "SPARK_GRAFT_SF_DIR"),
+    ("serving/launcher.py", "PSS_JWT_SECRET"),
+}
+
+
+def test_no_env_var_knobs():
+    """Tuning knobs are module constants, never environment variables:
+    an env read makes a code path depend on the shell that launched it
+    and lets a one-off setting outlive its measurement. Walk the AST of
+    every package module and fail on any ``os.environ``/``os.getenv``
+    use outside the deployment settings above."""
+    import ast
+    import pathlib
+
+    def os_attr(node, *attrs):
+        return (
+            isinstance(node, ast.Attribute)
+            and node.attr in attrs
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+        )
+
+    pkg = pathlib.Path(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ) / "pennsieve_streaming_spark"
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        tree = ast.parse(py.read_text())
+        allowed_nodes = set()
+        for node in ast.walk(tree):
+            # os.getenv("K", ...), os.environ.get("K", ...), os.environ["K"]
+            if isinstance(node, ast.Call) and os_attr(node.func, "getenv"):
+                env, key = node.func, node.args[0] if node.args else None
+            elif (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "get"
+                and os_attr(node.func.value, "environ")
+            ):
+                env, key = node.func.value, node.args[0] if node.args else None
+            elif isinstance(node, ast.Subscript) and os_attr(node.value, "environ"):
+                env, key = node.value, node.slice
+            else:
+                continue
+            if isinstance(key, ast.Constant) and (rel, key.value) in _ENV_READS_ALLOWED:
+                allowed_nodes.add(id(env))
+        for node in ast.walk(tree):
+            if os_attr(node, "environ", "getenv") and id(node) not in allowed_nodes:
+                offenders.append(f"{rel}:{node.lineno}")
+            elif isinstance(node, ast.ImportFrom) and node.module == "os" and any(
+                a.name in ("environ", "getenv") for a in node.names
+            ):
+                offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"environment reads outside deployment settings: {offenders}"

@@ -283,14 +283,18 @@ def test_montage_error_carries_reference_wire_shape(spark, samples):
 
 
 def test_explicit_query_limit_cannot_bypass_admission(spark, samples):
-    """VERDICT r2 'What's wrong' #4: a client-supplied queryLimit used
-    to skip the planner guard entirely (raw_limit=None). The transport
-    admission guard must bound the effective collect size: a raw
-    request over a huge window with queryLimit=10^9 answers on the
-    error lane BEFORE any Spark job, and the connection survives."""
+    """A client-supplied queryLimit must not lift the admission guard:
+    the router bounds the effective collect size, min(estimate,
+    queryLimit). A raw request over a huge window with queryLimit=10^9
+    answers on the error lane BEFORE any Spark job (none runs in the
+    session's job group), and the connection survives."""
+    session = QuerySession(
+        spark, samples, {"Fp1": 1.0, "Cz": 1.0}, "admission-probe"
+    )
+    tracker = spark.sparkContext.statusTracker()
 
     async def main():
-        server = TimeSeriesServer(_factory(spark, samples))
+        server = TimeSeriesServer(lambda session_id: session)
         port = await server.start()
         try:
             r, w = await asyncio.open_connection("127.0.0.1", port)
@@ -300,6 +304,9 @@ def test_explicit_query_limit_cannot_bypass_admission(spark, samples):
             await w.drain()
             msgs = await _recv_until(r, lambda m: "error" in m)
             assert "limit" in msgs[-1]["reason"].lower()
+            assert msgs[-1]["channelNames"] == ["Fp1"]
+            # refused before any job: the session's group ran nothing
+            assert list(tracker.getJobIdsForGroup(session.job_group)) == []
             # a small explicit limit on the same huge window is FINE:
             # effective rows = min(estimate, limit) <= admission cap
             w.write(b'{"virtualChannels":["Fp1"],"startTime":0,'
@@ -308,6 +315,10 @@ def test_explicit_query_limit_cannot_bypass_admission(spark, samples):
             await w.drain()
             msgs = await _recv_until(r, lambda m: "rows" in m)
             assert len(msgs[-1]["rows"]) == 5
+            # ...and the tracker does see this group's jobs once one runs
+            async with asyncio.timeout(10):
+                while not tracker.getJobIdsForGroup(session.job_group):
+                    await asyncio.sleep(0.05)
             w.close()
         finally:
             await server.stop()

@@ -348,6 +348,21 @@ def test_binary_protobuf_mode(spark, samples):
             assert msg.segment.data == [float(i % 13) for i in range(10)]
             assert msg.segment.is_min_max is False
             assert msg.total_responses == 1
+            # an empty resampled page keeps its kind: a pan past the
+            # end of the 300 s recording at 10 samples per pixel
+            req.update(startTime=1_000_000_000, endTime=1_100_000_000,
+                       pixelWidth=10_000_000)
+            w.write(_mask_frame(json.dumps(req).encode()))
+            await w.drain()
+            async with asyncio.timeout(30):
+                while True:
+                    opcode, payload = await read_frame(r)
+                    if opcode == OP_BINARY:
+                        break
+            msg = TimeSeriesMessage.from_bytes(payload)
+            assert msg.segment.channel_name == "Fp1"
+            assert msg.segment.is_min_max is True
+            assert msg.segment.nr_points == 0 and msg.segment.data == []
             # errors still arrive as JSON text frames
             w.write(_mask_frame(b'{"montage": "no_such_scheme"}'))
             await w.drain()
