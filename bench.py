@@ -22,6 +22,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry  # noqa: E402
 from pennsieve_streaming_spark.session import get_spark  # noqa: E402
+from pennsieve_streaming_spark.util import pin_scope  # noqa: E402
 
 HEADLINE = [
     "ts_window_query",
@@ -70,18 +71,6 @@ def _sentinel_sec(spark) -> float:
     return best
 
 
-def _drop_leftover_state(spark) -> None:
-    """Reset data state between reps so every rep computes from the
-    parquet inputs: clear the SQL cache AND unpersist leftover
-    persistent RDDs (localCheckpoint blocks from pinned intermediates
-    are not covered by clearCache and would otherwise accumulate over
-    the 85 query executions, aging the session)."""
-    spark.catalog.clearCache()
-    jsc = spark.sparkContext._jsc
-    for rdd in jsc.getPersistentRDDs().values():
-        rdd.unpersist()
-
-
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -113,9 +102,12 @@ def main() -> None:
     # so min-of-passes removes transient contention.
     for _ in range(max(1, REPS)):
         for name in HEADLINE:
-            _drop_leftover_state(spark)  # every rep computes from parquet
+            spark.catalog.clearCache()  # every rep computes from parquet
             t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
+            with pin_scope():  # the query's pins do not age the session
+                queries[name](spark, sf_dir).write.mode("overwrite").format(
+                    "noop"
+                ).save()
             best[name] = min(best[name], time.perf_counter() - t0)
     timings = {name: round(best[name], 4) for name in HEADLINE}
 

@@ -423,7 +423,7 @@ def holt_anomalies(samples, alpha: float, beta: float, k: float = 2.0):
     from pennsieve_streaming_spark.operators.stats import (
         channel_percentiles,
     )
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     h = holt_filter(samples, alpha, beta)
     w = Window.partitionBy("channel").orderBy("ts", "value")
@@ -431,10 +431,8 @@ def holt_anomalies(samples, alpha: float, beta: float, k: float = 2.0):
     # the median, the MAD deviation pass, and the final filter — three
     # references, each of which used to replay the per-channel Holt
     # recurrence (a sequential pandas stage over every sample). The
-    # Python boundary runs once. pin_big, not localCheckpoint (ADVICE
-    # r11): residuals are |samples| rows — persist keeps the lineage
-    # recoverable and the cache evictable at scale.
-    r = pin_big(
+    # Python boundary runs once.
+    r = pin(
         h.withColumn("pred", F.lag("forecast").over(w))
         .filter(F.col("pred").isNotNull())
         .select(

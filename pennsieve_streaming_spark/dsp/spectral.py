@@ -365,7 +365,7 @@ def fingerprint_match_pairs(
     posting; n_frames counts frames where BOTH sides have a
     sub-fingerprint.
     """
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     # keyed feeds SIX subtrees (posting sizes, the capped join's two
     # self-join legs, and both aligned-verify legs): pin the narrow
@@ -373,9 +373,7 @@ def fingerprint_match_pairs(
     # a per-frame FFT pandas stage over the raw audio — executes
     # once, not once per plan reference (the pitch/tempo replay fix,
     # optimization r11; 24 raw scans -> 0 in the planned query).
-    # pin_big: frame tables are |samples|/hop rows — input-proportional
-    # — so they persist with lineage kept (ADVICE r11).
-    keyed = pin_big(fingerprints.select("channel", "win", "fp"))
+    keyed = pin(fingerprints.select("channel", "win", "fp"))
     sizes = keyed.groupBy("win", "fp").agg(
         F.count(F.lit(1)).alias("_m")
     )
@@ -616,7 +614,7 @@ def fingerprint_offset_search(
     |channels|×(2·max_lag+1) rows before the rank; the verify joins
     each channel's sequence once against the (broadcast) winner row.
     """
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     # db feeds THREE subtrees (posting sizes, the capped hits join,
     # the aligned verify) and qf TWO (hits, the lag-shifted verify
@@ -624,8 +622,8 @@ def fingerprint_offset_search(
     # pipeline (per-frame FFT pandas stage) runs once per side, not
     # once per plan reference (optimization r11; 30 raw scans -> 0 in
     # the planned query).
-    db = pin_big(db_fp.select("channel", "win", "fp"))
-    qf = pin_big(
+    db = pin(db_fp.select("channel", "win", "fp"))
+    qf = pin(
         query_fp.select(
             F.col("win").alias("q_win"), F.col("fp").alias("q_fp")
         )
@@ -1244,7 +1242,7 @@ def energy_vad(
     merge) runs on the frame table, |samples|/frame rows. Envelope:
     Σxq² per frame binds at |value|·quant ≈ 3e8 for 64-sample frames.
     """
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     fr = int(frame)
     q = int(quant)
@@ -1266,7 +1264,7 @@ def energy_vad(
     # window pass a second time for the same predicate (the
     # snr_estimate shape). The frame table is then PINNED: the median
     # rank pass, its count, and the activity split all reference it.
-    en = pin_big(
+    en = pin(
         framed.groupBy("channel", "frame")
         .agg(
             F.count(F.lit(1)).alias("_n"),
@@ -1903,12 +1901,12 @@ def pitch_track(
         F.count(F.lit(1)).alias("_n"),
         F.sum("xq").cast("long").alias("_s"),
     )
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     # d feeds THREE subtrees (R(0) plus both legs of the lag
     # self-join): pin the demeaned table so the ranking-window pass
     # runs once, not three times over the raw scan
-    d = pin_big(
+    d = pin(
         ranked.join(per, ["channel", "win"])
         .filter(F.col("_n") == fr)
         .select(
@@ -2019,13 +2017,13 @@ def tempo_estimate(
         F.count(F.lit(1)).alias("_n"),
         F.sum(F.expr("xq * xq")).cast("long").alias("_e"),
     ).filter(F.col("_n") == fr)
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     ow = Window.partitionBy("channel").orderBy("win")
     # the onset table feeds R(0) plus both self-join legs: pin it so
     # the frame rollup + lag window run once (|samples|/frame rows —
     # a cheap checkpoint vs three recomputes of the raw-scan window)
-    o = pin_big(
+    o = pin(
         en.withColumn("_ep", F.lag("_e").over(ow))
         .filter(F.col("_ep").isNotNull())
         .select(
@@ -2114,7 +2112,7 @@ def snr_estimate(
     Plan / 100 TB: one per-channel ranking window, one frame rollup,
     the median + split on the |samples|/frame table, one final agg.
     """
-    from pennsieve_streaming_spark.util import pin_big
+    from pennsieve_streaming_spark.util import pin
 
     fr, q = int(frame), int(quant)
     w = Window.partitionBy("channel").orderBy("ts", "value")
@@ -2135,7 +2133,7 @@ def snr_estimate(
     # pinned (optimization r11): en feeds the median rank pass, its
     # count, and the signal/noise split — three references that each
     # replayed the raw per-channel sort-window pass.
-    en = pin_big(
+    en = pin(
         framed.groupBy("channel", "win").agg(
             F.count(F.lit(1)).alias("_n"),
             F.sum(F.expr("xq * xq")).cast("long").alias("energy_q"),

@@ -40,6 +40,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pennsieve_streaming_spark.util import pin, pin_scope
+
 # Knuth multiplicative hash over doc_id — engine-portable (plain
 # integer arithmetic), used instead of rand() so sampling is
 # deterministic and oracle-replayable.
@@ -654,7 +656,6 @@ def curate_corpus(
     max_dup3: float = 0.2,
     contam_threshold: float = 0.5,
     pack_budget: int = 256,
-    persist_stats: bool = True,
 ) -> DataFrame:
     """The full corpus-curation pipeline as ONE Spark plan: quality
     floor -> repetition filter -> benchmark decontamination ->
@@ -668,18 +669,14 @@ def curate_corpus(
     packing window over the survivors; the benchmark set rides in as a
     1-row broadcast.
 
-    ``persist_stats`` (default on) caches the narrow text-free stats
-    projection before the gates; the cache lives until the session
-    evicts it (LRU) or the caller runs ``spark.catalog.clearCache()``
-    — repeated invocations in one long-lived session should clear or
-    pass ``persist_stats=False``. Without the barrier, Catalyst's
-    predicate pushdown inlines each aliased stat expression into its
-    filter conjunct and the n-gram/shingle chains are re-evaluated per
-    conjunct — measured 392 s vs 34 s at 2M docs (11×). The cached
-    relation is ~70 bytes/doc (no text), so at 1B docs it is a ~70 GB
-    cluster-wide MEMORY_AND_DISK footprint; the no-cache alternative
-    at that scale is writing the stats projection to a table and
-    filtering the readback.
+    The narrow text-free stats projection is pinned before the gates.
+    Without the barrier, Catalyst's predicate pushdown inlines each
+    aliased stat expression into its filter conjunct and the
+    n-gram/shingle chains are re-evaluated per conjunct — measured
+    392 s vs 34 s at 2M docs (11×). The pinned table is ~70 bytes/doc
+    (no text), so at 1B docs it is a ~70 GB cluster-wide footprint;
+    the alternative at that scale is writing the stats projection to
+    a table and filtering the readback.
 
     Output: (doc_id, lang, source, quality, dup_3gram_ratio,
     overlap_ratio, sample_u, n_tokens, tok_offset, start_seq, end_seq)
@@ -687,7 +684,6 @@ def curate_corpus(
     shard.
     """
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     from pennsieve_streaming_spark.llm.text import with_quality
 
@@ -708,20 +704,20 @@ def curate_corpus(
             ),
         )
     )
-    stats = base.select(
-        "doc_id",
-        "lang",
-        "source",
-        "quality",
-        "dup_3gram_ratio",
-        "overlap_ratio",
-        "sample_u",
-        # guarded count (whitespace-only text = 0 tokens), matching
-        # pack_sequences
-        F.expr(N_TOKENS).alias("n_tokens"),
+    stats = pin(
+        base.select(
+            "doc_id",
+            "lang",
+            "source",
+            "quality",
+            "dup_3gram_ratio",
+            "overlap_ratio",
+            "sample_u",
+            # guarded count (whitespace-only text = 0 tokens), matching
+            # pack_sequences
+            F.expr(N_TOKENS).alias("n_tokens"),
+        )
     )
-    if persist_stats:
-        stats = stats.persist(StorageLevel.MEMORY_AND_DISK)
     kept = stats.where(
         (F.col("sample_u") < F.expr(f"({rate_case_expr(rates)})"))
         & (F.col("quality") >= quality_min)
@@ -994,16 +990,21 @@ def quality_classifier_fit(
     Returns {"w": [w0..w3], "mean": [m1..m3], "std": [s1..s3]}.
     """
     means, stds = _classifier_stats(documents)
-    # cache the narrow (doc_id, x1..x3, y) projection: the loop scans
-    # it n_iter times, and at corpus scale re-reading text + re-running
-    # the feature regexes per iteration would dominate training
-    feats = _classifier_features(documents).withColumn(
-        "y",
-        F.when(
-            F.col("quality") >= F.lit(label_cut), F.lit(1.0)
-        ).otherwise(F.lit(0.0)),
-    ).drop("text", "quality").cache()
-    try:
+    # pin the narrow (doc_id, x1..x3, y) projection: the loop scans it
+    # n_iter times, and at corpus scale re-reading text + re-running
+    # the feature regexes per iteration would dominate training; only
+    # the model leaves the scope
+    with pin_scope():
+        feats = pin(
+            _classifier_features(documents)
+            .withColumn(
+                "y",
+                F.when(
+                    F.col("quality") >= F.lit(label_cut), F.lit(1.0)
+                ).otherwise(F.lit(0.0)),
+            )
+            .drop("text", "quality")
+        )
         w = [0.0, 0.0, 0.0, 0.0]
         for _ in range(n_iter):
             z = _classifier_z_expr(w, means, stds)
@@ -1020,8 +1021,6 @@ def quality_classifier_fit(
                 ]
             ).collect()[0]
             w = [round(w[j] + lr * float(row[f"g{j}"]), 9) for j in range(4)]
-    finally:
-        feats.unpersist()
     return {"w": w, "mean": means, "std": stds}
 
 
@@ -1263,8 +1262,6 @@ def contamination_fuzzy(
         minhash_wide,
         shingles,
     )
-    from pennsieve_streaming_spark.util import pin_big
-
     # pin the corpus signature table (optimization r11): the band
     # derivation and the agreement verify both reference it, and each
     # reference used to replay the full corpus shingle + minhash pass
@@ -1272,7 +1269,7 @@ def contamination_fuzzy(
     # holds with the narrow (doc_id, mh_0..mh_{n-1}) table
     # materialized. The benchmark side stays lazy: both its
     # references collapse to broadcast-sized tables.
-    corp_mh = pin_big(minhash_wide(shingles(documents), n_hashes))
+    corp_mh = pin(minhash_wide(shingles(documents), n_hashes))
     bench_mh = minhash_wide(shingles(benchmark), n_hashes)
     corp_bands = lsh_band_keys(corp_mh)
     bench_bands = lsh_band_keys(bench_mh).select(
@@ -1364,12 +1361,11 @@ def source_kl_divergence(documents: DataFrame) -> DataFrame:
     st = toks.groupBy("source", "t").agg(
         F.count(F.lit(1)).cast("long").alias("c_ts")
     )
-    if hasattr(st, "_jdf"):
-        # st feeds FOUR subtrees (itself, ct, ns, big_n) — pin it once
-        # so the tokenize+count pass runs once, not four times (the
-        # graph.py/global_rank materialization pattern; |source×vocab|
-        # rows, orders of magnitude below the token stream)
-        st = st.localCheckpoint()
+    # st feeds FOUR subtrees (itself, ct, ns, big_n) — pin it once
+    # so the tokenize+count pass runs once, not four times (the
+    # graph.py/global_rank materialization pattern; |source×vocab|
+    # rows, orders of magnitude below the token stream)
+    st = pin(st)
     ct = st.groupBy("t").agg(F.sum("c_ts").cast("long").alias("c_t"))
     ns = st.groupBy("source").agg(
         F.sum("c_ts").cast("long").alias("n_s"),
@@ -1547,8 +1543,7 @@ def dsir_weights(
         .groupBy("doc_id", "source", "t")
         .agg(F.count(F.lit(1)).cast("long").alias("c_td"))
     )
-    if hasattr(dt, "_jdf"):
-        dt = dt.localCheckpoint()
+    dt = pin(dt)
     raw = dt.groupBy("t").agg(F.sum("c_td").cast("long").alias("c_raw"))
     tgt = (
         dt.filter(F.col("source") == target_source)
@@ -1622,10 +1617,7 @@ def source_jsd(documents: DataFrame) -> DataFrame:
         .groupBy("source", "t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
     )
-    from pennsieve_streaming_spark.util import pin_big
-
-    # (source x token-type) table grows with the corpus: persist
-    st = pin_big(st)
+    st = pin(st)
     ns = st.groupBy("source").agg(
         F.sum("c").cast("long").alias("n_s")
     )

@@ -28,7 +28,7 @@ from pennsieve_streaming_spark.llm.hashing import (
     md5_hash64_expr,
     minhash_perm_constants,
 )
-from pennsieve_streaming_spark.util import ensure_parallelism, pin, pin_big
+from pennsieve_streaming_spark.util import ensure_parallelism, pin
 
 BAND_WEIGHTS = [1, 31, 961, 29791]  # 31^(j % rows_per_band), rows_per_band=4
 
@@ -178,13 +178,6 @@ def lsh_candidate_pairs(
     # trades one write of the narrow (doc_id, band, band_key) table —
     # 3 BIGINTs/row, block-manager-backed with disk spill — for ≥6
     # replays of the far heavier signature pipeline.
-    # Flavor note (optimization r12): a persist-based pin_big was
-    # A/B'd here and REJECTED — the columnar-cache encode + 6x decode
-    # round trip measured +25-28% on doc_minhash_lsh_pairs AND
-    # doc_dup_clusters (interleaved min-of-2, both directions, quiet
-    # box), so this site keeps the localCheckpoint: the table is an
-    # intra-query ephemeral whose executor-loss cost is a query retry,
-    # accepted and documented (OPTIMIZATION_r12.md §2.2).
     band_keys = pin(band_keys)
     stats = band_keys.groupBy("band", "band_key").agg(
         F.count(F.lit(1)).alias("_bn"),
@@ -419,8 +412,6 @@ def simhash_near_pairs(
     band_key); the cap's stats groupBy is map-side partial-agg with a
     1-row-per-key join back — bounded like the MinHash-LSH path.
     """
-    from pennsieve_streaming_spark.util import pin_big
-
     if n_bands is None:
         n_bands = int(max_hamming) + 1
     layout = simhash_bands(bits, n_bands)
@@ -436,11 +427,6 @@ def simhash_near_pairs(
     # parquet scans in doc_simhash_near_pairs. The pinned table is one
     # narrow row per doc; the band stack below it is a cheap narrow
     # expansion.
-    # Flavor note (optimization r12): pin_big was A/B'd here and
-    # REJECTED — the persisted flavor re-planned the band stack with
-    # 6x more live exchanges and measured +13% on
-    # doc_simhash_near_pairs (interleaved min-of-3); the checkpoint
-    # keeps the r11 single-exchange shape (OPTIMIZATION_r12.md §2.2).
     keys = pin(fingerprints.select("doc_id", "simhash")).selectExpr(
         "doc_id", "simhash", f"stack({n_bands}, {stack}) AS (band, band_key)"
     )
@@ -860,14 +846,12 @@ def winnow_overlap_pairs(
     <= max_df, so candidate volume is sum(df²) bounded by |fp|·max_df;
     per-doc counts broadcast back. Same shape as the LSH band join.
     """
-    from pennsieve_streaming_spark.util import pin_big
-
     # pin the fingerprint table (optimization r11): sizes, the df cap,
     # and both self-join legs reference it, and each reference used to
     # replay the whole winnowing pipeline (char k-grams + window-min
     # selection over every document). One narrow (doc_id, fp)
     # materialization, the fingerprint pass runs once.
-    fps = pin_big(
+    fps = pin(
         winnow_fingerprints(documents, k, window, text_col).select(
             "doc_id", "fp"
         ).distinct()
@@ -1682,12 +1666,10 @@ def cross_corpus_containment_screened(
     that is orders of magnitude less shuffle than the unscreened
     audit.
     """
-    from pennsieve_streaming_spark.util import pin_big
-
     # pin: the screen (bloom build + delta scoring scan) feeds both
     # the flagged-id list (referenced throughout the audit) and the
     # final join — unpinned it re-executes once per reference
-    scr = pin_big(
+    scr = pin(
         crawl_bloom_screen(documents, new_ids, k, threshold, n_bits)
     )
     flagged_ids = scr.filter(F.col("flagged")).select("doc_id")

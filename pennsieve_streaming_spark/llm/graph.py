@@ -357,19 +357,17 @@ def label_propagation(
         )
         .distinct()
     )
-    if hasattr(und, "_jdf"):
-        # the edge list re-enters every round (and its two union
-        # branches would otherwise replay the upstream near-dup
-        # pipeline twice per round) — pin it once (the source_kl
-        # shared-subtree rule)
-        und = und.localCheckpoint()
+    # the edge list re-enters every round (and its two union
+    # branches would otherwise replay the upstream near-dup
+    # pipeline twice per round) — pin it once (the source_kl
+    # shared-subtree rule)
+    und = pin(und)
     labels = nodes.withColumn("label", F.col("id"))
     win = Window.partitionBy("u").orderBy(
         F.desc("cnt"), F.asc("label")
     )
     for _ in range(int(n_rounds)):
-        if hasattr(labels, "_jdf"):
-            labels = labels.localCheckpoint()
+        labels = pin(labels)
         cand = (
             und.join(
                 labels.select(F.col("id").alias("v"), "label"), "v"

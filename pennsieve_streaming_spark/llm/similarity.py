@@ -17,9 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pennsieve_streaming_spark.util import pin, pin_big
-
-from pennsieve_streaming_spark.util import ensure_parallelism
+from pennsieve_streaming_spark.util import ensure_parallelism, pin
 
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> x * y), CAST(0 AS DOUBLE), "
@@ -1369,8 +1367,7 @@ def mmr_topk(
         .withColumn("cosine", dot / (F.sqrt(nq) * F.sqrt(nv)))
         .select("query_id", "neighbor_id", "cosine")
     )
-    # |queries|x|corpus| score table: persist, not checkpoint
-    scored = pin_big(scored)
+    scored = pin(scored)
     from pyspark.sql import Window
 
     pair_dot = F.expr(DOT.format(a="dv", b="sv"))
@@ -1707,8 +1704,7 @@ def embedding_isotropy(
             ).alias("u")
         )
     )
-    if hasattr(base, "_jdf"):
-        base = base.localCheckpoint()
+    base = pin(base)
     comp = base.select(F.posexplode("u").alias("j", "c"))
     dims = comp.groupBy("j").agg(F.sum("c").cast("long").alias("s"))
     tot = dims.agg(
@@ -2197,7 +2193,7 @@ def knn_degree_assortativity(edges: DataFrame) -> DataFrame:
     e = edges.select(
         F.col("query_id").alias("src"), F.col("neighbor_id").alias("dst")
     )
-    e = pin_big(e)
+    e = pin(e)
     indeg = e.groupBy("dst").agg(
         F.count(F.lit(1)).cast("long").alias("indeg")
     )
@@ -2271,8 +2267,8 @@ def greedy_graph_search(
     emb = _as_double(embeddings, vec_col).select(
         F.col(id_col).alias("_nid"), F.col(vec_col).alias("_nv")
     )
-    emb = pin_big(emb)
-    e = pin_big(edges.select("query_id", "neighbor_id"))
+    emb = pin(emb)
+    e = pin(edges.select("query_id", "neighbor_id"))
     qs = _as_double(queries, vec_col).select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q")
     )

@@ -9,7 +9,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from pennsieve_streaming_spark.llm.hashing import poly_hash_expr
-from pennsieve_streaming_spark.util import pin, pin_big
+from pennsieve_streaming_spark.util import pin
 
 TOKS = "split(trim(text), '\\\\s+')"
 
@@ -294,8 +294,6 @@ def bm25_search(
     ]
     qdf = spark.createDataFrame(qterms, "query_id long, term string")
 
-    from pennsieve_streaming_spark.util import pin_big
-
     toks = (
         _with_toks(documents)
         .where(F.expr("length(trim(text)) > 0"))
@@ -310,7 +308,7 @@ def bm25_search(
     # (sum of per-term counts per doc == the doc's token count, and
     # both see exactly the docs with >= 1 token) instead of
     # re-aggregating the token stream a second time.
-    tf = pin_big(
+    tf = pin(
         toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     )
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
@@ -933,20 +931,16 @@ def collocations(
         "i -> concat_ws(' ', element_at(toks, CAST(i AS INT)), "
         "element_at(toks, CAST(i + 1 AS INT)))) END"
     )
-    from pennsieve_streaming_spark.util import pin_big
-
     # pins (optimization r11): bg feeds the N2 total and the main
     # filter chain, uni feeds the N1 total and both unigram broadcast
     # joins — each reference used to replay a corpus tokenize +
-    # explode pass. Both are TYPE tables whose cardinality grows with
-    # the corpus (not provably small), so they persist with lineage
-    # kept instead of checkpointing (ADVICE r11).
-    bg = pin_big(
+    # explode pass.
+    bg = pin(
         doc_toks.select(F.explode(F.expr(bigrams_expr)).alias("bg"))
         .groupBy("bg")
         .agg(F.count(F.lit(1)).cast("long").alias("c_ab"))
     )
-    uni = pin_big(
+    uni = pin(
         doc_toks.select(F.explode("toks").alias("t"))
         .groupBy("t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
@@ -1231,9 +1225,8 @@ def textrank_keywords(
             )
         )
     )
-    # per-doc keyword graph tables are corpus-proportional: persist
-    edges = pin_big(edges)
-    verts = pin_big(cand.select("doc_id", "w").distinct())
+    edges = pin(edges)
+    verts = pin(cand.select("doc_id", "w").distinct())
     nv = verts.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("_n")
     )
@@ -1537,8 +1530,7 @@ def length_quantiles(documents: DataFrame) -> DataFrame:
     ).withColumn("_r", F.row_number().over(w).cast("long")).select(
         "source", "x", "_r"
     )
-    # |docs|-proportional: persist, not checkpoint (ADVICE r11)
-    ranked = pin_big(ranked)
+    ranked = pin(ranked)
     n = ranked.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs")
     )
@@ -1599,8 +1591,7 @@ def ngram_entropy(documents: DataFrame) -> DataFrame:
     cxy = bi.groupBy("source", "x", "y").agg(
         F.count(F.lit(1)).cast("long").alias("c_xy")
     )
-    # n-gram type table grows with the corpus: persist (ADVICE r11)
-    cxy = pin_big(cxy)
+    cxy = pin(cxy)
     cx = cxy.groupBy("source", "x").agg(
         F.sum("c_xy").cast("long").alias("c_x")
     )

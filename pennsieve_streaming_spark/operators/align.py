@@ -132,7 +132,7 @@ def _blocked_halo_union(
     # lineage, while ``u`` itself is |samples|+|probes| rows of
     # payload. Materializing a corpus-sized table to save cheap
     # narrow re-scans inverts the recompute-cheap rule (guide §8);
-    # the r12 A/B measured a pin_big here 27% SLOWER at sf0.1
+    # the r12 A/B measured a persist pin here 27% SLOWER at sf0.1
     # (interleaved min-of-3) and at 100 TB it would write the whole
     # union to executor storage. The replayed scans stay.
     extra = [c for c in u.columns if c not in ("channel", "ts", "value", flag)]

@@ -284,8 +284,6 @@ def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     would not scale to long funnels), with a broadcast step-name dim
     filling unreached tail steps with 0.
     """
-    from pennsieve_streaming_spark.util import pin
-
     # Each stage's per-user frame is PINNED (optimization r11): stage
     # i feeds both its union branch and stage i+1's join, so without
     # the pin stage 0's filtered events scan replayed in every later
@@ -301,10 +299,7 @@ def funnel_steps(events: DataFrame, steps: list[str]) -> DataFrame:
     # could blow the broadcast limit / driver memory at the 100 TB
     # target. The frame is already materialized, so the gate count is
     # a cheap job over stored blocks; above the cap the hint is
-    # dropped and the planner shuffle-joins. (A persist()+count
-    # pin_big variant that restores real stats was A/B'd and measured
-    # +54% wall at sf0.1 — AQE TableCacheQueryStage round-trips — so
-    # the gated checkpoint keeps both the speed and the safety.)
+    # dropped and the planner shuffle-joins.
     def _stage_join_side(frame):
         n = frame.limit(FUNNEL_BROADCAST_CAP + 1).count()
         return F.broadcast(frame) if n <= FUNNEL_BROADCAST_CAP else frame
@@ -948,16 +943,10 @@ def assoc_rules(events: DataFrame, min_support_users: int = 5) -> DataFrame:
     Output: (antecedent, consequent, n_ab, n_a, n_b, n_users,
     support, confidence, lift).
     """
-    from pennsieve_streaming_spark.util import pin
-
     ms = int(min_support_users)
     # pinned (optimization r11): the user total, the item counts, and
     # both self-join legs reference the basket table — four replays of
     # the events scan + distinct exchange without the pin.
-    # Flavor note (optimization r12): a persist-based pin_big was
-    # A/B'd and REJECTED — identical plan shape but +57% wall
-    # (columnar encode + 5x decode vs raw checkpoint rows, interleaved
-    # min-of-3, no overlap across runs); see OPTIMIZATION_r12.md §2.2.
     baskets = pin(events.select("user_id", "event_type").distinct())
     n_users = baskets.agg(
         F.countDistinct("user_id").cast("long").alias("n_users")
@@ -2049,13 +2038,9 @@ def type_pmi(events: DataFrame) -> DataFrame:
     user_id (fan-out bounded by the type-vocabulary size per user),
     partial-agg rollups; the type marginals broadcast.
     """
-    from pennsieve_streaming_spark.util import pin
-
     # pinned (optimization r11): the assoc_rules rule — type
     # marginals, the user total, and both self-join legs reference
-    # the distinct user-type table. Checkpoint flavor kept: the
-    # assoc_rules A/B (same table shape) rejected the columnar cache
-    # (OPTIMIZATION_r12.md §2.2).
+    # the distinct user-type table.
     ut = pin(events.select("user_id", "event_type").distinct())
     nt = ut.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_t")
@@ -2358,8 +2343,6 @@ def mann_whitney(events: DataFrame, quant: int = 100) -> DataFrame:
     |types| is a vocabulary, not a data scale.
     """
     from pyspark.sql import Window
-
-    from pennsieve_streaming_spark.util import pin
 
     q = int(quant)
     ev = events.select(

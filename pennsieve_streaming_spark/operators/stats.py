@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pennsieve_streaming_spark.util import pin, pin_big
+from pennsieve_streaming_spark.util import pin
 
 QUANT = 1_000_000
 
@@ -1051,11 +1051,10 @@ def granger_screen(
         "ts",
         F.expr(f"CAST(round(value * {q}) AS BIGINT)").alias("xq"),
     )
-    if hasattr(v, "_jdf"):
-        # v feeds three join legs (cur + two lag copies); pin the
-        # upstream grid/LOCF pass once instead of recomputing it per
-        # leg (graph.py/global_rank materialization pattern)
-        v = v.localCheckpoint()
+    # v feeds three join legs (cur + two lag copies); pin the
+    # upstream grid/LOCF pass once instead of recomputing it per
+    # leg (graph.py/global_rank materialization pattern)
+    v = pin(v)
     cur = v.select(
         F.col("channel").alias("ch_dst"), "ts", F.col("xq").alias("yq")
     )
@@ -2385,8 +2384,6 @@ def recurrence_quantification(
     (2016 rows per 64-sample window), embarrassingly parallel across
     (channel, window) keys.
     """
-    from pennsieve_streaming_spark.util import pin, pin_big
-
     ws = int(window_samples)
     q = int(quant)
     lm = int(l_min)
@@ -2407,9 +2404,7 @@ def recurrence_quantification(
         )
     )
     w = Window.partitionBy("channel").orderBy("ts", "value")
-    # ranked/full are |samples|- and |windows|-proportional: pin_big
-    # (persist, lineage kept) rather than localCheckpoint (ADVICE r11)
-    ranked = pin_big(
+    ranked = pin(
         samples.select(
             "channel",
             "ts",
@@ -2421,7 +2416,7 @@ def recurrence_quantification(
         .withColumn("pos", (F.col("_rn") % ws).cast("long"))
         .join(F.broadcast(pct), "channel")
     )
-    full = pin_big(
+    full = pin(
         ranked.groupBy("channel", "win").agg(
             F.count(F.lit(1)).cast("long").alias("n")
         ).filter(F.col("n") == ws)
@@ -2576,8 +2571,6 @@ def multiscale_entropy(
     import numpy as np
     import pandas as pd
 
-    from pennsieve_streaming_spark.util import pin, pin_big
-
     ws = int(window_samples)
     q = int(quant)
     mm = int(m)
@@ -2586,8 +2579,6 @@ def multiscale_entropy(
     # scan + per-channel sort-window pass (ranked) and the percentile
     # pass (pct) each replayed 3x. Pinned, each pass runs once; the
     # per-scale coarse-graining below reads the narrow materialization.
-    # pct is |channels| rows (pin); ranked is |samples| rows, so it
-    # persists with lineage kept instead of checkpointing (ADVICE r11).
     pct = pin(
         channel_percentiles(samples, (0.25, 0.75)).select(
             "channel",
@@ -2597,7 +2588,7 @@ def multiscale_entropy(
         )
     )
     w = Window.partitionBy("channel").orderBy("ts", "value")
-    ranked = pin_big(
+    ranked = pin(
         samples.select(
             "channel",
             "ts",
@@ -3278,8 +3269,7 @@ def haar_denoise(
         .filter(F.col("_nw") == ws)
         .select("channel", "win")
     )
-    # |samples|-proportional shared table: persist, not checkpoint
-    rk = pin_big(ranked.join(full, ["channel", "win"]))
+    rk = pin(ranked.join(full, ["channel", "win"]))
     lv_arr = ", ".join(str(i) for i in range(1, lv + 1))
     e = rk.select(
         "channel",
@@ -3401,8 +3391,7 @@ def mutual_information(
         "ts",
         F.expr(f"CAST(round(value * {q}) AS BIGINT)").alias("xq"),
     )
-    if hasattr(v, "_jdf"):
-        v = v.localCheckpoint()
+    v = pin(v)
     ext = v.groupBy("channel").agg(
         F.min("xq").alias("mn"), F.max("xq").alias("mx")
     )
@@ -3426,9 +3415,8 @@ def mutual_information(
         .groupBy("ch_x", "ch_y", "bx", "by")
         .agg(F.count(F.lit(1)).cast("long").alias("n_ij"))
     )
-    if hasattr(joint, "_jdf"):
-        # joint feeds three subtrees (itself + both marginals)
-        joint = joint.localCheckpoint()
+    # joint feeds three subtrees (itself + both marginals)
+    joint = pin(joint)
     rx = joint.groupBy("ch_x", "ch_y", "bx").agg(
         F.sum("n_ij").cast("long").alias("r_i")
     )
@@ -3497,8 +3485,6 @@ def hampel_despike(
     rank passes (median, MAD) + one broadcast-free join back by
     position.
     """
-    from pennsieve_streaming_spark.util import pin_big
-
     ws = int(window_samples)
     q = int(quant)
     kk = int(k)
@@ -3506,12 +3492,9 @@ def hampel_despike(
     # AND the joined rk (whose med/dev legs fan out again), and dev
     # feeds both the MAD rank pass and the final join — unpinned, the
     # plan replayed the raw per-channel sort-window pass up to 8x.
-    # pin_big, not localCheckpoint (ADVICE r11): both tables are
-    # |samples| rows — dataset-scale — so they persist with lineage
-    # kept (recoverable, LRU-evictable) instead of checkpointing.
     # ``pinned=False`` keeps the lazy-logical-plan contract for
     # sqlapi view registration (an eager barrier runs jobs).
-    _p = pin_big if pinned else (lambda df: df)
+    _p = pin if pinned else (lambda df: df)
     w = Window.partitionBy("channel").orderBy("ts", "value")
     ranked = _p(
         samples.select(
@@ -3590,8 +3573,7 @@ def theil_sen_slope(
         F.col("ts").alias("t"),
         F.expr(f"CAST(round(value * {q}) AS BIGINT)").alias("xq"),
     )
-    if hasattr(v, "_jdf"):
-        v = v.localCheckpoint()
+    v = pin(v)
     # Parallelize the pair fan-out (optimization r11): the day grid is
     # tiny (it arrives as a 1-partition pinned table), so the planner
     # broadcast-joins the legs and the WHOLE O(days²)-per-channel pair
@@ -3750,8 +3732,7 @@ def entropy_rate(
         "ts",
         F.expr(f"CAST(round(value * {q}) AS BIGINT)").alias("xq"),
     )
-    if hasattr(v, "_jdf"):
-        v = v.localCheckpoint()
+    v = pin(v)
     ext = v.groupBy("channel").agg(
         F.min("xq").alias("mn"), F.max("xq").alias("mx")
     )
@@ -3771,8 +3752,7 @@ def entropy_rate(
                  F.col("bin").alias("bj"))
         .agg(F.count(F.lit(1)).cast("long").alias("n_ij"))
     )
-    if hasattr(pairs, "_jdf"):
-        pairs = pairs.localCheckpoint()
+    pairs = pin(pairs)
     ri = pairs.groupBy("channel", "bi").agg(
         F.sum("n_ij").cast("long").alias("r_i")
     )
@@ -5098,8 +5078,7 @@ def max_drawdown(samples: DataFrame, quant: int = 100) -> DataFrame:
         "_pmax",
         (F.col("_pmax") - F.col("xq")).alias("dd"),
     )
-    # |samples|-proportional shared table: persist, not checkpoint
-    rows = pin_big(rows)
+    rows = pin(rows)
     g = rows.groupBy("channel").agg(
         F.count(F.lit(1)).cast("long").alias("n_points"),
         F.max("dd").cast("long").alias("max_dd_q"),

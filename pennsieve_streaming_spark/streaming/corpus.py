@@ -77,7 +77,7 @@ def curate_document_stream(
     Note: Catalyst inlines the aliased stat expressions into the gate
     predicate (see NOTES_r3 on the alias-inlining trap), so quality
     and dup_3gram_ratio are evaluated ~2× per row here. A stream can't
-    take the ``persist`` barrier ``curate_corpus`` uses; 2× on a
+    take the pin barrier ``curate_corpus`` uses; 2× on a
     per-micro-batch narrow map is the accepted cost.
 
     Output: (doc_id, lang, source, quality, dup_3gram_ratio,

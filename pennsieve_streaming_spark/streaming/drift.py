@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from pennsieve_streaming_spark.util import pin
+
 
 def stream_drift_counts(
     samples_stream: DataFrame,
@@ -66,10 +68,9 @@ def drain_distribution_drift(
     )
     q.awaitTermination()
     drained = spark.table(query_name)
-    if hasattr(drained, "_jdf"):
-        # the finish self-joins the counter table (densify grid +
-        # totals); pin the tiny |channels|×bins drain once so the
-        # plan doesn't re-reference the transient memory sink (which
-        # trips Catalyst's conflicting-reference resolution)
-        drained = drained.localCheckpoint()
+    # the finish self-joins the counter table (densify grid +
+    # totals); pin the tiny |channels|×bins drain once so the
+    # plan doesn't re-reference the transient memory sink (which
+    # trips Catalyst's conflicting-reference resolution)
+    drained = pin(drained)
     return finish_distribution_drift(drained, n_bins)

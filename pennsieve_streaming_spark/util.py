@@ -2,63 +2,71 @@
 
 from __future__ import annotations
 
+import contextlib
+import contextvars
+
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
 
 
-def pin(df: DataFrame, eager: bool = True) -> DataFrame:
-    """``localCheckpoint`` when the backend supports it (classic JVM
-    DataFrames, detected via ``_jdf``); no-op passthrough otherwise
-    (e.g. Spark Connect, streaming DataFrames — ``localCheckpoint``
-    raises on a stream, and the pin is an optimization, never a
-    correctness requirement). Used to truncate iterative lineage or to
-    share one materialization across several join legs — in both uses
-    the plan stays CORRECT without the pin, just deeper or recomputed,
-    so a passthrough is safe. The shared helper keeps the guard
-    uniform across operators (ADVICE r7: four round-7 operators called
-    localCheckpoint unguarded while their siblings guarded).
+# RDD ids of the pins made inside the innermost open pin_scope
+_PIN_SCOPE: contextvars.ContextVar[list[int] | None] = contextvars.ContextVar(
+    "pin_scope", default=None
+)
 
-    Reserve this for provably SMALL tables (grids, vocabularies,
-    per-channel envelopes, capped pair lists): localCheckpoint stores
-    to executor-local, non-fault-tolerant blocks with the lineage
-    truncated, which is the wrong durability trade for anything
-    proportional to the input — use :func:`pin_big` for those
-    (ADVICE r11)."""
-    if getattr(df, "isStreaming", False):
+
+def pin(df: DataFrame) -> DataFrame:
+    """Materialize ``df`` once, eagerly, with its lineage cut — the one
+    rule for every shared or iterated intermediate: pin wherever a plan
+    would otherwise replay a subtree (several join legs or actions read
+    it) or grow with each iteration (a loop feeds its output back in).
+
+    The materialization is an eager ``localCheckpoint``. The engine's
+    sessions are ``local[N]``, so a lost block means a lost driver and
+    lineage recovery would buy nothing; the checkpointed ``LogicalRDD``
+    keeps size statistics for the planner as a persisted relation does,
+    and wherever the two were A/B'd the checkpoint was faster.
+
+    Inside :func:`pin_scope` the pin is released when the scope exits;
+    outside one it lives until the JVM garbage-collects it.
+
+    No-op passthrough for streaming DataFrames (``localCheckpoint``
+    raises on a stream) and for backends without a JVM DataFrame
+    (``_jdf``, e.g. Spark Connect): the plan is correct without the
+    pin, just deeper or recomputed."""
+    if getattr(df, "isStreaming", False) or not hasattr(df, "_jdf"):
         return df
-    if hasattr(df, "_jdf"):
-        return df.localCheckpoint(eager=eager)
-    return df
-
-
-def pin_big(df: DataFrame, eager: bool = True) -> DataFrame:
-    """Share one materialization of a DATASET-SCALE intermediate across
-    several plan references without truncating lineage:
-    ``persist(MEMORY_AND_DISK)`` plus an eager ``count()`` barrier.
-
-    Versus :func:`pin` (localCheckpoint): blocks lost with an executor
-    are recomputed from lineage instead of failing the query, and
-    storage is the columnar cache (compressed, LRU-evictable) rather
-    than raw checkpoint blocks — the right trade for tables
-    proportional to the input (ADVICE r11). The eager count matters:
-    AQE submits independent downstream subtrees concurrently, and a
-    lazily-persisted shared stage races — none of the concurrent
-    consumers reuse the in-flight cache fill (measured in r11 §1.2),
-    so the barrier is what actually deduplicates the work. A side
-    benefit over localCheckpoint: the materialized cache carries real
-    size statistics, so the planner/AQE keeps choosing join strategies
-    from data size instead of flying blind.
-
-    No-op passthrough for streams and non-JVM backends, like pin()."""
-    if getattr(df, "isStreaming", False):
-        return df
-    if not hasattr(df, "_jdf"):
-        return df
-    from pyspark import StorageLevel
-
-    out = df.persist(StorageLevel.MEMORY_AND_DISK)
-    if eager:
-        out.count()
+    out = df.localCheckpoint()
+    scope = _PIN_SCOPE.get()
+    if scope is not None:
+        scope.append(out._jdf.logicalPlan().rdd().id())
     return out
+
+
+@contextlib.contextmanager
+def pin_scope():
+    """Release on exit every :func:`pin` made inside the block, in this
+    thread or context (a concurrent thread's pins are its own). Wrap it
+    around BOTH building and executing a query: a checkpoint read after
+    its release fails.
+
+    Pins are tracked by RDD id, so the earlier rounds of a pinned loop
+    stay collectable while the scope is open. Release goes through the
+    checkpointed RDD itself — ``DataFrame.unpersist()`` does nothing to
+    a checkpoint. A nested scope releases only its own pins."""
+    ids: list[int] = []
+    token = _PIN_SCOPE.set(ids)
+    try:
+        yield
+    finally:
+        _PIN_SCOPE.reset(token)
+        sc = SparkContext._active_spark_context
+        if ids and sc is not None:
+            rdds = sc._jsc.getPersistentRDDs()
+            for rid in ids:
+                rdd = rdds.get(rid)
+                if rdd is not None:
+                    rdd.unpersist()
 
 
 def live_plan_nodes(df: DataFrame, executed: bool = False) -> list[str]:
@@ -189,12 +197,9 @@ def global_rank(
     # Materialize ONCE: repartitionByRange samples its boundaries per
     # job, so letting the sizes job and the caller's job re-execute the
     # exchange independently could place rows in different partitions
-    # than the offsets were computed from. localCheckpoint pins one
-    # partitioning both reads share (same trick as the
-    # connected-components loop in llm/graph.py).
-    local = parted.withColumn(
-        "_gr_lrank", F.row_number().over(w)
-    ).localCheckpoint()
+    # than the offsets were computed from. The pin fixes one
+    # partitioning both reads share.
+    local = pin(parted.withColumn("_gr_lrank", F.row_number().over(w)))
     sizes = sorted(
         (
             (r["_gr_pid"], r["_gr_cnt"])
@@ -257,12 +262,14 @@ def global_cumsum(
         "_gc_pid", F.spark_partition_id()
     )
     w = Window.partitionBy("_gc_pid").orderBy(*order_cols)
-    local = parted.withColumn(
-        "_gc_lsum",
-        F.sum(value_col)
-        .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
-        .cast("long"),
-    ).localCheckpoint()
+    local = pin(
+        parted.withColumn(
+            "_gc_lsum",
+            F.sum(value_col)
+            .over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+            .cast("long"),
+        )
+    )
     sizes = sorted(
         (
             (r["_gc_pid"], r["_gc_tot"])

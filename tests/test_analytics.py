@@ -902,3 +902,24 @@ def test_funnel_windowed_cuts_slow_conversions(spark):
     assert (r.n_first_users, r.n_converted, r.n_converted_window) == (3, 2, 1)
     assert abs(r.window_rate - 1 / 3) < 1e-12
     assert r.capture_share == 0.5
+
+
+def test_mann_whitney_partial_ties_golden(spark):
+    """mann_whitney folds its tie correction into the rank-window
+    aggregation (Σ_rows(_t²−1) == Σ_groups(t³−t) exactly). The golden
+    has PARTIAL ties (neither none nor all), so a wrong fold moves z."""
+    import math
+
+    from pennsieve_streaming_spark.operators.analytics import mann_whitney
+
+    rows = [("a", float(v)) for v in [1, 1, 2, 3]]
+    rows += [("b", float(v)) for v in [1, 2, 2, 4]]
+    ev = spark.createDataFrame(rows, "event_type string, value double")
+    out = mann_whitney(ev).collect()[0]
+    # pooled: value 1 x3, 2 x3, 3 x1, 4 x1 -> tie3 = 2*(27-3) = 48
+    # 2*rank: v1 -> 4, v2 -> 10, v3 -> 14, v4 -> 16; R1_2 = 4+4+10+14
+    assert (out.n_a, out.n_b) == (4, 4)
+    assert out.u2 == 12  # 32 - 4*5
+    var_u = (16 / 12.0) * (9 - 48 / 56.0)  # tie-corrected, n=8
+    assert out.z == round((12 - 16) / (2 * math.sqrt(var_u)), 9)
+    assert not out.significant

@@ -17,6 +17,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import scale_smoke_100x as smoke  # noqa: E402
+from pyspark.sql import functions as F  # noqa: E402
 
 
 def test_heavy_family_plans_keep_their_shape(spark, sf_dir):
@@ -38,12 +39,10 @@ def test_heavy_family_plans_keep_their_shape(spark, sf_dir):
 def test_pitch_tempo_pin_holds(spark, sf_dir):
     """The r10 audit caught the pitch/tempo frame tables re-running
     their ranking window once per consuming subtree (24 parquet scans
-    in the executed plan). The fix materializes the table once (r12:
-    pin_big — persist + count, so the cached lineage stays printed
-    under InMemoryRelation but executes only at the fill barrier);
-    this guard asserts the executed plan's LIVE operators read the
-    materialization instead of re-scanning parquet, so the regression
-    can't sneak back."""
+    in the executed plan). The fix pins the table once; this guard
+    asserts the executed plan's LIVE operators read the checkpoint
+    instead of re-scanning parquet, so the regression can't sneak
+    back."""
     import __spark_entry__ as entry
     from pennsieve_streaming_spark.util import live_plan_counts
 
@@ -65,7 +64,7 @@ def test_fingerprint_pin_holds(spark, sf_dir):
     subtree (30 parquet scans in mm_audio_offset_search's planned
     query, 24 in mm_audio_match_pairs — the pitch/tempo replay
     disease in the fingerprint family). The fix materializes the
-    narrow (channel, win, fp) tables once (r12: pin_big); this guard
+    narrow (channel, win, fp) tables once (a pin); this guard
     asserts the executed plan's LIVE operators read the
     materializations instead of re-scanning parquet."""
     import __spark_entry__ as entry
@@ -140,8 +139,8 @@ def test_incremental_build_pins_and_plan(spark, sf_dir):
     captured = []
     real_pin = U.pin
 
-    def spy(df, eager=True):
-        r = real_pin(df, eager)
+    def spy(df):
+        r = real_pin(df)
         captured.append(df)
         return r
 
@@ -180,3 +179,88 @@ def test_crawl_screen_plan_no_joins(spark, sf_dir):
     assert "SortMergeJoin" not in plan
     assert "ShuffledHashJoin" not in plan
     assert "CartesianProduct" not in plan
+
+
+def test_live_scan_count_stops_at_cached_relation(spark, sf_dir):
+    """live_plan_nodes must not descend into an ``InMemoryTableScan``:
+    the launcher's cached serving samples are read through one, and
+    their stored lineage ran once at the fill. A persisted frame read
+    by both join legs counts ZERO live source scans, while the full
+    explain output still prints the cached lineage."""
+    from pennsieve_streaming_spark.util import live_plan_counts
+
+    base = (
+        spark.read.parquet(f"{sf_dir}/events.parquet")
+        .groupBy("event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    p = base.persist()
+    p.count()
+    try:
+        out = p.alias("x").join(
+            p.alias("y"),
+            F.col("x.event_type") == F.col("y.event_type"),
+        )
+        c = live_plan_counts(
+            out, {"scan": "Scan parquet", "imts": "InMemoryTableScan"}
+        )
+        assert c["scan"] == 0 and c["imts"] == 2
+        full = out._jdf.queryExecution().explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+        assert "Scan parquet" in full
+    finally:
+        p.unpersist()
+
+
+def test_pin_streaming_passthrough(spark):
+    """localCheckpoint raises on a stream; pin passes it through."""
+    from pennsieve_streaming_spark.util import pin
+
+    stream = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+    )
+    assert pin(stream) is stream
+
+
+def test_pin_scope_releases_its_own_pins(spark, sf_dir):
+    """pin_scope frees exactly the pins made inside it: around
+    doc_minhash_lsh_pairs (3 pins) the persisted RDDs return to their
+    entry set, a frame pinned outside the scope stays readable, and a
+    nested scope releases only its own pins. Sets, not sizes: the JVM
+    may garbage-collect a pin no live frame references (an earlier
+    test's, or a checkpoint whose consumer was itself checkpointed)
+    at any time, which only ever shrinks the set."""
+    import __spark_entry__ as entry
+    import pennsieve_streaming_spark.util as U
+
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    def rdd_id(df):
+        return df._jdf.logicalPlan().rdd().id()
+
+    outside = U.pin(spark.range(10).selectExpr("id * 2 AS v"))
+    at_entry = persisted()
+    with U.pin_scope():
+        df = entry.queries()["doc_minhash_lsh_pairs"](spark, sf_dir)
+        df.write.format("noop").mode("overwrite").save()
+        scoped = list(U._PIN_SCOPE.get())
+        assert len(scoped) == 3
+    left = persisted()
+    assert left <= at_entry and not left & set(scoped)
+    assert rdd_id(outside) in left
+    assert sorted(r.v for r in outside.collect()) == list(range(0, 20, 2))
+
+    with U.pin_scope():
+        a = U.pin(spark.range(5))
+        with U.pin_scope():
+            b = U.pin(a.selectExpr("id + 1 AS id"))
+            assert {rdd_id(a), rdd_id(b)} <= persisted()
+        assert rdd_id(a) in persisted() and rdd_id(b) not in persisted()
+        assert a.count() == 5
+    assert rdd_id(a) not in persisted()

@@ -165,3 +165,51 @@ def test_no_env_var_knobs():
             ):
                 offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"environment reads outside deployment settings: {offenders}"
+
+
+# Files that may materialize outside util.pin, each for a lifetime or
+# a Spark requirement that a query-scoped pin does not fit.
+_MATERIALIZE_ALLOWED = {
+    # the serving working set, cached for the whole session
+    "pennsieve_streaming_spark/serving/launcher.py",
+    # Spark reads the corrupt-record column only from a cached frame
+    "pennsieve_streaming_spark/sources/text.py",
+    # persist and unpersist scoped to one foreachBatch call
+    "pennsieve_streaming_spark/streaming/corpus.py",
+}
+
+
+def test_materialization_only_through_pin():
+    """Every shared or iterated intermediate materializes through
+    ``util.pin``, the one flavour ``pin_scope`` can release. Walk the
+    AST of every package module and ``__spark_entry__.py`` and fail on
+    any ``.localCheckpoint(``/``.persist(``/``.cache(`` call outside
+    ``util.pin`` and the files above."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    files = sorted((root / "pennsieve_streaming_spark").rglob("*.py"))
+    files.append(root / "__spark_entry__.py")
+    offenders = []
+    for py in files:
+        rel = py.relative_to(root).as_posix()
+        if rel in _MATERIALIZE_ALLOWED:
+            continue
+        tree = ast.parse(py.read_text())
+        skip = set()
+        if rel == "pennsieve_streaming_spark/util.py":
+            pin_def = next(
+                n for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "pin"
+            )
+            skip = {id(n) for n in ast.walk(pin_def)}
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "persist", "cache")
+                and id(node) not in skip
+            ):
+                offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
+    assert not offenders, f"materializations outside util.pin: {offenders}"

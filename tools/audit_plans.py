@@ -13,10 +13,10 @@ the §13-style replay audit, runnable every round.
 
 r12: counts are taken over the LIVE operators only, by walking the
 JVM plan tree (util.live_plan_counts) and never descending into a
-cached relation: persisted (pin_big) intermediates carry their cached
-lineage under InMemoryTableScan, which executes once at the fill
-barrier, not per consumer — counting it would make every cache look
-like a replay. (String-grepping the explain output cannot express
+cached relation: a persisted relation (the serving launcher's cached
+samples) carries its cached lineage under InMemoryTableScan, which
+executes once at the fill barrier, not per consumer — counting it
+would make every cache look like a replay. (String-grepping the explain output cannot express
 this: formatted mode nests a cached plan's AQE dump at sibling
 indentation.) Counts are therefore single (per live node), not the
 old formatted-grep x2 convention. The walked plan is the PREPARED
@@ -35,7 +35,10 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entry  # noqa: E402
 from pennsieve_streaming_spark.session import get_spark  # noqa: E402
-from pennsieve_streaming_spark.util import live_plan_counts  # noqa: E402
+from pennsieve_streaming_spark.util import (  # noqa: E402
+    live_plan_counts,
+    pin_scope,
+)
 
 PATTERNS = {
     "scan_parquet": "Scan parquet",
@@ -59,15 +62,13 @@ def main() -> None:
     rows = []
     for name, build in queries.items():
         try:
-            df = build(spark, sf_dir)
-            row = {"query": name}
-            row.update(live_plan_counts(df, PATTERNS, executed=True))
+            with pin_scope():
+                df = build(spark, sf_dir)
+                row = {"query": name}
+                row.update(live_plan_counts(df, PATTERNS, executed=True))
             rows.append(row)
         except Exception:
             rows.append({"query": name, "error": traceback.format_exc(limit=2)})
-        # pinned RDDs from this query are dead weight for the next one
-        for (rid, rdd) in spark.sparkContext._jsc.getPersistentRDDs().items():
-            rdd.unpersist()
         spark.catalog.clearCache()
     rows.sort(key=lambda r: (-(r.get("scan_parquet", 0)), r["query"]))
     with open(out_path, "w") as f:

@@ -31,12 +31,9 @@ sys.path.insert(
 )
 
 import __spark_entry__ as entry  # noqa: E402
-from bench import (  # noqa: E402
-    SENTINEL_QUIET_SEC,
-    _drop_leftover_state,
-    _sentinel_sec,
-)
+from bench import SENTINEL_QUIET_SEC, _sentinel_sec  # noqa: E402
 from pennsieve_streaming_spark.session import get_spark  # noqa: E402
+from pennsieve_streaming_spark.util import pin_scope  # noqa: E402
 
 # The 100 TB-dominant set: screened decontamination (whole-corpus
 # bloom + gated exact audit), the composed corpus build, the full
@@ -80,11 +77,12 @@ def main() -> None:
     best: dict[str, float] = {name: float("inf") for name in HEAVY}
     for _ in range(max(1, REPS)):
         for name in HEAVY:
-            _drop_leftover_state(spark)
+            spark.catalog.clearCache()
             t0 = time.perf_counter()
-            queries[name](spark, sf_dir).write.mode("overwrite").format(
-                "noop"
-            ).save()
+            with pin_scope():
+                queries[name](spark, sf_dir).write.mode("overwrite").format(
+                    "noop"
+                ).save()
             best[name] = min(best[name], time.perf_counter() - t0)
     timings = {name: round(best[name], 4) for name in HEAVY}
 
