@@ -1,13 +1,25 @@
 #!/usr/bin/env python
-"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default
+"""Time registry queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+Run: python bench.py [query ...]      (default: the 17 HEADLINE queries)
 
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": 0.1}
+   "queries": {name: sec, ...}, "sf": 0.1,
+   "sentinel_sec": s, "load_ratio": r}
 
 Each query is forced end-to-end with the noop sink (full computation,
-no driver collect overhead).
+no driver collect overhead); each timing is the min over
+$SPARK_GRAFT_BENCH_REPS interleaved passes (default 5).
+
+The heavy set (the operators that dominate a large corpus run):
+  SPARK_GRAFT_BENCH_REPS=3 python bench.py doc_contamination_screened \
+    doc_corpus_build doc_minhash_signatures doc_minhash_lsh_pairs \
+    doc_dup_clusters emb_ann_ivf_pq doc_bpe_token_ids mm_audio_tempo \
+    doc_incremental_dedup_screened doc_incremental_build
+The 10x scale point: python tools/make_sf1.py /tmp/sf1, then
+  SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py [query ...]
 """
 
 from __future__ import annotations
@@ -72,6 +84,11 @@ def _sentinel_sec(spark) -> float:
 
 
 def main() -> None:
+    names = sys.argv[1:] or HEADLINE
+    queries = entry.queries()
+    unknown = [n for n in names if n not in queries]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1)) if m else -1.0
@@ -82,18 +99,10 @@ def main() -> None:
 
     sentinel = _sentinel_sec(spark)
 
-    # Measurement fix (optimization r11, guide §1.4 and the no-caching
-    # rule): earlier rounds pre-cached the five base views before the
-    # timed region (r2's "deployment shape" argument), so every timed
-    # number excluded the parquet scan + view derivation, and intra-
-    # query .cache() calls (doc_minhash_lsh_pairs' two-phase candidate
-    # cache) stayed warm across reps — the min-of-5 then measured the
-    # warm-cache replay, not the query. Both are gone: nothing is
-    # cached outside the timed region, and the cache is CLEARED before
-    # every rep so each rep computes from the parquet inputs.
-    # OPTIMIZATION_r11.md records numbers under both methodologies.
-    queries = entry.queries()
-    best: dict[str, float] = {name: float("inf") for name in HEADLINE}
+    # Nothing is cached outside the timed region, and the cache is
+    # cleared before every rep, so each rep computes from the parquet
+    # inputs (OPTIMIZATION_r11.md compares this with pre-cached views).
+    best: dict[str, float] = {name: float("inf") for name in names}
     # Round-robin the reps (pass 1 runs every query, then pass 2, ...)
     # instead of repeating each query back-to-back: co-tenant CPU spikes
     # on this shared box last seconds, so consecutive reps of one query
@@ -101,7 +110,7 @@ def main() -> None:
     # queries). Interleaving puts each query's reps many seconds apart,
     # so min-of-passes removes transient contention.
     for _ in range(max(1, REPS)):
-        for name in HEADLINE:
+        for name in names:
             spark.catalog.clearCache()  # every rep computes from parquet
             t0 = time.perf_counter()
             with pin_scope():  # the query's pins do not age the session
@@ -109,13 +118,17 @@ def main() -> None:
                     "noop"
                 ).save()
             best[name] = min(best[name], time.perf_counter() - t0)
-    timings = {name: round(best[name], 4) for name in HEADLINE}
+    timings = {name: round(best[name], 4) for name in names}
 
     total = round(sum(timings.values()), 4)
     print(
         json.dumps(
             {
-                "metric": "headline_queries_total",
+                "metric": (
+                    "headline_queries_total"
+                    if names == HEADLINE
+                    else "queries_total"
+                ),
                 "value": total,
                 "unit": "sec",
                 "queries": timings,

@@ -122,6 +122,16 @@ REQUEST_TYPES = [
 ]
 
 
+def _query_limit(value: Any) -> int | None:
+    """An explicit queryLimit is a JSON integer >= 0 (not a bool):
+    anything else would reach the router unchecked."""
+    if value is None:
+        return None
+    if isinstance(value, bool) or not isinstance(value, int) or value < 0:
+        raise ValueError(f"queryLimit must be an integer >= 0, got {value!r}")
+    return value
+
+
 def parse_request(raw: str) -> Any:
     """Try-parse cascade over the request vocabulary (the reference
     attempts each JSON shape in order — parseFlow,
@@ -135,7 +145,7 @@ def parse_request(raw: str) -> Any:
             start_time=int(msg["startTime"]),
             end_time=int(msg["endTime"]),
             pixel_width=int(msg.get("pixelWidth", 0)),
-            query_limit=msg.get("queryLimit"),
+            query_limit=_query_limit(msg.get("queryLimit")),
             start_at_epoch=bool(msg.get("startAtEpoch", False)),
         )
     if "montage" in msg:
@@ -361,21 +371,14 @@ class QuerySession:
         events: DataFrame,
         waveforms: DataFrame | None = None,
         spike_duration_us: int | None = None,
-        data_driven: bool = False,
     ) -> dict[str, DataFrame]:
         """Unit-channel request (reference
         query/TimeSeriesUnitQueryRawHttp.scala): per channel either the
         per-pixel event summary, or — when zoomed in past the
         spike-send threshold and waveforms are available — the
-        min/max-resampled spike waveforms.
-
-        ``data_driven=True`` uses the reference-exact chunker (chunks
-        start at their first event, PredicateStreamChunker); the
-        default aligned tumbling buckets are the scalable flavor."""
-        from pennsieve_streaming_spark.operators.events import (
-            event_summary_data_driven,
-            event_summary_fixed,
-        )
+        min/max-resampled spike waveforms. The summary uses aligned
+        tumbling buckets (``event_summary_fixed``)."""
+        from pennsieve_streaming_spark.operators.events import event_summary_fixed
         from pennsieve_streaming_spark.operators.spikes import (
             resample_arrays_minmax,
             should_send_spikes,
@@ -400,10 +403,9 @@ class QuerySession:
                 )
                 out[name] = resample_arrays_minmax(ch_wf, n_points)
             elif req.pixel_width > 0:
-                summarize = (
-                    event_summary_data_driven if data_driven else event_summary_fixed
+                out[name] = event_summary_fixed(
+                    ch_events, start, end, req.pixel_width
                 )
-                out[name] = summarize(ch_events, start, end, req.pixel_width)
             else:
                 # raw event timestamps (reference /ts/retrieve/unit)
                 out[name] = ch_events.filter(

@@ -13,6 +13,29 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str) -> str:
+    """The driver heap when $SPARK_DRIVER_MEM is unset, from the text of
+    /proc/meminfo: a quarter of MemTotal, capped at 8g and floored at
+    1g, so the default heap fits the box it runs on."""
+    kb = next(
+        int(line.split()[1])
+        for line in meminfo.splitlines()
+        if line.startswith("MemTotal:")
+    )
+    return f"{min(8192, max(1024, round(kb / 4 / 1024)))}m"
+
+
+def _driver_memory() -> str:
+    mem = os.environ.get("SPARK_DRIVER_MEM")
+    if mem:
+        return mem
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:  # no /proc (not Linux)
+        return "8g"
+
+
 def get_spark(
     app_name: str = "pennsieve_streaming_spark",
     master: str | None = None,
@@ -53,7 +76,7 @@ def get_spark(
         # runs 8-wide mapAsyncUnordered per WS session — T3)
         .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", _driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

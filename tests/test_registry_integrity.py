@@ -213,3 +213,37 @@ def test_materialization_only_through_pin():
             ):
                 offenders.append(f"{rel}:{node.lineno} .{node.func.attr}(")
     assert not offenders, f"materializations outside util.pin: {offenders}"
+
+
+# Where the oracles may be read: the registry itself, the tests (the
+# one parity comparator is tests/oracle_compare.py), the benchmark's
+# answer check, and the REGISTRY.md generator.
+_ORACLE_READERS = {"__spark_entry__.py", "tools/gen_registry.py"}
+_ORACLE_READER_DIRS = {"tests", "perfbench"}
+
+
+def test_oracle_sql_read_only_by_the_one_comparator():
+    """Parity has one comparator, and it is bit-exact: a second one
+    that rounds floats prints MATCH where the parity test fails. Walk
+    the AST of every Python file in the repo and fail on an
+    ``oracle_sql()`` call outside the readers above."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    offenders = []
+    for py in sorted(root.rglob("*.py")):
+        rel = py.relative_to(root)
+        if (
+            rel.as_posix() in _ORACLE_READERS
+            or rel.parts[0] in _ORACLE_READER_DIRS
+            or any(part.startswith(".") for part in rel.parts)
+        ):
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Call) and (
+                getattr(node.func, "id", None) == "oracle_sql"
+                or getattr(node.func, "attr", None) == "oracle_sql"
+            ):
+                offenders.append(f"{rel.as_posix()}:{node.lineno}")
+    assert not offenders, f"oracle_sql() read outside the parity test: {offenders}"

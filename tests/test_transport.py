@@ -287,7 +287,9 @@ def test_explicit_query_limit_cannot_bypass_admission(spark, samples):
     the router bounds the effective collect size, min(estimate,
     queryLimit). A raw request over a huge window with queryLimit=10^9
     answers on the error lane BEFORE any Spark job (none runs in the
-    session's job group), and the connection survives."""
+    session's job group), and the connection survives. A queryLimit
+    that is not a JSON integer >= 0 is refused the same way, as
+    UnexpectedError, when the request is parsed."""
     session = QuerySession(
         spark, samples, {"Fp1": 1.0, "Cz": 1.0}, "admission-probe"
     )
@@ -298,6 +300,17 @@ def test_explicit_query_limit_cannot_bypass_admission(spark, samples):
         port = await server.start()
         try:
             r, w = await asyncio.open_connection("127.0.0.1", port)
+            for bad in (-1, True, 2.5, "5"):
+                w.write(json.dumps({
+                    "virtualChannels": ["Fp1"], "startTime": 0,
+                    "endTime": 200_000_000_000, "pixelWidth": 0,
+                    "queryLimit": bad,
+                }).encode() + b"\n")
+                await w.drain()
+                msgs = await _recv_until(r, lambda m: "error" in m)
+                assert msgs[-1]["error"] == "UnexpectedError", (bad, msgs[-1])
+                assert "queryLimit" in msgs[-1]["reason"]
+            assert list(tracker.getJobIdsForGroup(session.job_group)) == []
             w.write(b'{"virtualChannels":["Fp1"],"startTime":0,'
                     b'"endTime":200000000000,"pixelWidth":0,'
                     b'"queryLimit":1000000000}\n')

@@ -3,8 +3,8 @@
 parquet tables 10x with shifted keys (VERDICT r9 item 4: a second
 bench scale point for the 17 headline queries).
 
-Key-shift semantics mirror scale_smoke_100x._replicate so the derived
-views scale the way real growth would:
+Keys shift by the same 100M stride as tests/test_plan_guards._replicate,
+so the derived views scale the way real growth would:
   * lineitem.l_orderkey / orders.o_orderkey shift per replica — the
     derived samples/lead/sec channels keep their identity and rate
     but span 10x the time range (10x rows per channel);
@@ -18,7 +18,7 @@ views scale the way real growth would:
   * dimension tables copy through unchanged.
 
 Run: python tools/make_sf1.py [OUT_DIR]      (default /tmp/sf1)
-Then: SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py
+Then: SPARK_GRAFT_SF_DIR=/tmp/sf1 python bench.py [query ...]
 """
 
 from __future__ import annotations
